@@ -152,11 +152,6 @@ def st_to_ij(s: np.ndarray) -> np.ndarray:
     ).astype(np.int64)
 
 
-def ij_to_st_center(ij: np.ndarray) -> np.ndarray:
-    """(s,t) of the center of leaf cell column/row ``ij``."""
-    return (np.asarray(ij, dtype=np.float64) + 0.5) / MAX_SIZE
-
-
 # ---------------------------------------------------------------------------
 # Hilbert encode/decode
 # ---------------------------------------------------------------------------

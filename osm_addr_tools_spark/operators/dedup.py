@@ -34,11 +34,11 @@ from pyspark.sql.functions import pandas_udf
 
 from osm_addr_tools_spark.functions.text import _WORD_RE
 
-# Fingerprint tables persisted by simhash_pairs / winnow_partial_dups
-# (cache_fp=True). A persisted |docs|-sized table otherwise pins storage
+# Tables persisted by simhash_pairs, the ``cache_sigs`` minhash paths and
+# run_conflate. A persisted |docs|-sized table otherwise pins storage
 # memory for the rest of the session (ADVICE r4 — a slow leak for
 # long-lived sessions / repeated invocations): callers should invoke
-# release_persisted_fp() once the returned pair DataFrame has been
+# release_persisted_fp() once the returned DataFrame has been
 # materialized (bench.py does, after every query run).
 _PERSISTED_FP: list[DataFrame] = []
 
@@ -133,7 +133,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     k: int = 5,
     stop_shingle_df: int = 1000,
-    broadcast_hot: bool | None = None,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs (a < b, jaccard ≥ threshold).
 
@@ -148,14 +147,12 @@ def ngram_jaccard_pairs(
     512 smallest hashes — above the cap the measure is bottom-k-sketch
     Jaccard, not exact (documented trade-off for bounded row width).
 
-    ``broadcast_hot`` (VERDICT r3 #5): the hot-shingle set grows with the
-    corpus (every shingle with df > cap), so force-broadcasting it is
-    unbounded at 10^12 docs. Default ``None`` leaves the anti-join
-    strategy to Catalyst/AQE, which converts to broadcast from the REAL
-    post-shuffle size when it fits ``autoBroadcastJoinThreshold`` and
-    keeps a shuffled hash join when it doesn't — the scale-safe default
-    with no extra driver-side sizing job. ``True``/``False`` force
-    broadcast / shuffle for callers who know their corpus.
+    The hot-shingle set grows with the corpus (every shingle with df >
+    cap), so force-broadcasting it is unbounded at 10^12 docs (VERDICT r3
+    #5). The anti-join strategy is left to Catalyst/AQE, which converts
+    to broadcast from the REAL post-shuffle size when it fits
+    ``autoBroadcastJoinThreshold`` and keeps a shuffled hash join when it
+    doesn't — scale-safe, with no extra driver-side sizing job.
     """
     sh = df.select(
         F.col(id_col).alias("_id"), shingle_udf(k)(F.col(text_col)).alias("_sh")
@@ -166,10 +163,6 @@ def ngram_jaccard_pairs(
         .where(F.col("_df") > stop_shingle_df)
         .select("_g")
     )
-    if broadcast_hot is True:
-        hot = F.broadcast(hot)
-    elif broadcast_hot is False:
-        hot = hot.hint("shuffle_hash")
     ex = ex.join(hot, "_g", "left_anti")
     # per-doc sizes of the post-filter sets (one partial-agg shuffle on id)
     cnt = ex.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
@@ -386,7 +379,6 @@ def incremental_minhash_dedup(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    broadcast_batch: bool = False,
     cache_sigs: bool = False,
 ) -> DataFrame:
     """Ingest-time near-dup gate for a NEW batch against an EXISTING corpus
@@ -405,13 +397,14 @@ def incremental_minhash_dedup(
 
     Scale shape: the corpus index never re-shuffles per crawl if stored
     bucketed on (band, bucket) (sources.io.write_bucketed) — the candidate
-    join is then Exchange-free on the index side; alternatively, a typical
-    daily increment is ≪ corpus, so ``broadcast_batch=True`` broadcasts
-    the batch band table and the corpus-side scan never shuffles AT ALL.
+    join is then Exchange-free on the index side; a typical daily
+    increment is ≪ corpus, so AQE can broadcast the batch band table from
+    its runtime size and leave the corpus-side scan unshuffled.
     Within-batch stages shuffle only batch-sized tables. The batch
     signature subtree feeds ~6 plan branches (band tables, both verify
     joins, the survivor anti-join) — ``cache_sigs=True`` persists it once
-    (released via release_persisted_fp(), the winnow cache_fp contract).
+    (released via release_persisted_fp(), the standard fingerprint-cache
+    contract).
     Default stays off for API stability, but the r8 measurement flipped
     the small-scale trade: with the leaner CC driver loop the single
     materialization beats the ~6-branch racing recompute (best 6.1 s vs
@@ -440,8 +433,6 @@ def incremental_minhash_dedup(
     ib = _band_buckets(isig, bands, rpb)
 
     lhs = bb.select(F.col("_id").alias("a"), "band", "bucket")
-    if broadcast_batch:
-        lhs = F.broadcast(lhs)
     # candidates travel light (ids only); signatures re-join by id for the
     # verify step — the same payload discipline as minhash_lsh_pairs
     corpus_hits = (
@@ -727,9 +718,7 @@ def winnow_partial_dups(
     id_col: str = "doc_id",
     fp_col: str = "fp",
     stop_fp_df: int | None = None,
-    broadcast_hot: bool | None = None,
     salt: bool = False,
-    cache_fp: bool = False,
     **salt_kw,
 ) -> DataFrame:
     """Partial-duplicate pairs over winnowing fingerprints (a < b):
@@ -744,25 +733,20 @@ def winnow_partial_dups(
     creates k² candidate pairs, the first thing a boilerplate-heavy real
     corpus hits. Dropping them BEFORE the per-doc counts keeps containment
     exact over the post-filter fp sets (removed fps leave both the
-    intersection and the min() denominator consistently). ``broadcast_hot``
-    as in ngram_jaccard_pairs (None = AQE decides). ``salt=True`` routes
+    intersection and the min() denominator consistently); AQE picks the
+    hot-set anti-join strategy as in ngram_jaccard_pairs. ``salt=True`` routes
     the fp join through the J3 salted join for residual hot values under
     the cap.
     """
     # The distinct (id, fp) table feeds FOUR plan branches (hot-fp
     # histogram, per-doc counts, both join sides), so any UDF upstream of
-    # ``fp`` executes once per branch. ``cache_fp=True`` persists it once
-    # instead. MEASURED trade (sf0.1, local[32], warm): recompute 3.7 s vs
-    # persist 7.1 s — at this scale the pipelined recompute across cores
-    # beats the materialization barrier + cache round-trip, so the default
-    # is off; at web scale, where the fingerprint UDF pass over the corpus
-    # dwarfs one |docs·fps| materialization, flip it on (or better:
-    # checkpoint the fingerprint table to parquet as its own stage and
-    # pass that in).
+    # ``fp`` executes once per branch. Persisting it here measured worse
+    # (sf0.1, local[32], warm: recompute 3.7 s vs persist 7.1 s — the
+    # pipelined recompute across cores beats the materialization barrier
+    # + cache round-trip). At web scale, where the fingerprint UDF pass
+    # over the corpus dwarfs one |docs·fps| materialization, checkpoint
+    # the fingerprint table to parquet as its own stage and pass that in.
     u = fp.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("fp")).distinct()
-    if cache_fp:
-        u = u.persist()
-        _PERSISTED_FP.append(u)  # released via release_persisted_fp()
     if stop_fp_df is not None:
         hot = (
             u.groupBy("fp")
@@ -770,10 +754,6 @@ def winnow_partial_dups(
             .where(F.col("_df") > stop_fp_df)
             .select("fp")
         )
-        if broadcast_hot is True:
-            hot = F.broadcast(hot)
-        elif broadcast_hot is False:
-            hot = hot.hint("shuffle_hash")
         u = u.join(hot, "fp", "left_anti")
     cnt = u.groupBy("_id").agg(F.count(F.lit(1)).alias("nf"))
     lhs = u.select(F.col("_id").alias("a"), "fp")
@@ -813,7 +793,6 @@ def connected_components(
     checkpoint_dir: str | None = None,
     checkpoint_buckets: int = 16,
     job_id: str | None = None,
-    unroll: int = 1,
 ) -> DataFrame:
     """Connected components over an undirected pair set — the group-forming
     step every dedup pipeline needs after candidate pairs (MinHash, SimHash,
@@ -839,13 +818,10 @@ def connected_components(
     localCheckpoint of the new label table (truncating BOTH lineage and
     the logical plan — iterative plans otherwise grow ~3× per round and
     long-chain graphs OOM the driver during analysis; see the loop
-    comment). The in-memory path batches ``unroll`` rounds per
-    localCheckpoint job and reads the convergence flag off the cached
-    blocks, cutting the driver's per-round job count — the dominant cost
-    of the loop at small-to-medium graph sizes (rounds are scheduling-
-    latency-bound, not data-bound); results are identical because extra
-    rounds past the fixpoint are no-ops (labels monotone non-increasing,
-    every fixpoint of the closed-neighborhood min = component min).
+    comment). The in-memory path reads the convergence flag off each
+    round's cached blocks, cutting the driver's per-round job count — the
+    dominant cost of the loop at small-to-medium graph sizes (rounds are
+    scheduling-latency-bound, not data-bound).
 
     ``checkpoint_dir`` (VERDICT r3 #6 — the production shape): write each
     round's label table through the S5 manifest sink (plans/manifest.py,
@@ -1000,43 +976,24 @@ def connected_components(
             # ``e`` exactly once, it is also what materializes the persist
             # cache without concurrent duplicate evaluation), (b) carries
             # the convergence flag INSIDE the checkpointed frame, so the
-            # per-chunk convergence count scans cached blocks instead of
-            # running a separate join job, and (c) optionally unrolls
-            # ``unroll`` rounds per localCheckpoint job. unroll stays 1 by
-            # default: Spark has no common-subtree elimination, so round
-            # k+1's plan re-computes round k's 2-3× (measured 4× wall at
-            # unroll=3 — the un-materialized inner rounds recompute, and
-            # their copies race); with unroll=1 every chunk references
-            # only cached leaves. Extra rounds past the fixpoint are
-            # idempotent (labels monotone non-increasing; any fixpoint of
-            # the closed-neighborhood min IS the component min), so
-            # chunked convergence detection returns identical labels.
-            rounds_left = max_iter
+            # per-round convergence count scans cached blocks instead of
+            # running a separate join job, and (c) checkpoints every round:
+            # Spark has no common-subtree elimination, so a plan holding k
+            # un-materialized rounds re-computes the inner ones 2-3× (r8
+            # measured 4× the wall at 3 rounds per checkpoint); one round
+            # per localCheckpoint references only cached leaves.
             labels = None  # None = implicit identity labels (lbl(u) = u)
-            while True:
-                if rounds_left <= 0:
-                    raise RuntimeError(
-                        f"connected_components did not converge in {max_iter} rounds"
-                    )
-                k = min(max(1, unroll), rounds_left)
-                cur = labels
-                for _ in range(k):
-                    if cur is None:
-                        # round 1 from identity labels: nbr-min is min(v)
-                        # and the pointer jump through identity is a no-op
-                        cur = e.groupBy("u").agg(
-                            F.least(F.col("u"), F.min("v")).alias("lbl")
-                        )
-                    else:
-                        cur = _round(cur)
-                rounds_left -= k
+            for _ in range(max_iter):
                 if labels is None:
-                    cmp = cur.select(
-                        "u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg")
-                    )
+                    # round 1 from identity labels: nbr-min is min(v)
+                    # and the pointer jump through identity is a no-op
+                    cmp = e.groupBy("u").agg(
+                        F.least(F.col("u"), F.min("v")).alias("lbl")
+                    ).select("u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg"))
                 else:
                     cmp = (
-                        cur.join(labels.withColumnRenamed("lbl", "_old"), "u")
+                        _round(labels)
+                        .join(labels.withColumnRenamed("lbl", "_old"), "u")
                         .select(
                             "u", "lbl",
                             (F.col("lbl") != F.col("_old")).alias("_chg"),
@@ -1046,6 +1003,10 @@ def connected_components(
                 labels = ck.select("u", "lbl")
                 if ck.where(F.col("_chg")).count() == 0:
                     break
+            else:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iter} rounds"
+                )
     finally:
         e.unpersist()
     # the final label table is already materialized (localCheckpoint /

@@ -10,8 +10,10 @@ shuffle / skew handling at 10^12 docs) lives in:
   * cell-bucketed candidate generation (J1/J4/J5) — turns every spatial
     predicate into an equi-join Catalyst can shuffle-plan;
   * two-pass salting (J3) — hot-cell histogram job → per-key salt factors
-    broadcast back, bounding task size under urban skew (AQE skew-split
-    only covers sort-merge joins, so this is deliberate app-level logic);
+    broadcast back, bounding task size under urban skew. AQE also splits
+    skewed sort-merge and shuffled-hash partitions, but only from runtime
+    statistics and its own thresholds; the north rule asks for explicit
+    hot-cell handling, so this is deliberate app-level logic;
   * exactness assertions carried at plan-build time (kNN level sizing).
 """
 
@@ -45,17 +47,6 @@ def cell_encode_udf(level: int):
     # plan. The blocked pushdowns all reference the UDF output itself, so
     # nothing that could reach the parquet scan is lost.
     return enc.asNondeterministic()
-
-
-def cell_neighbors_udf():
-    """cell → array of the 8 same-level neighbors (face-wrap correct)."""
-
-    @pandas_udf("array<long>")
-    def nbr(cell: pd.Series) -> pd.Series:
-        arr = C.cell_neighbors(cell.to_numpy(np.int64))
-        return pd.Series(list(arr))
-
-    return nbr
 
 
 def cell_parent_udf(level: int):
@@ -92,32 +83,45 @@ def cell_center_udf():
     return center
 
 
+def _ring_vertices(ring) -> np.ndarray:
+    """One ring of struct<lon,lat> → (n, 2) float64 vertices."""
+    return np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64)
+
+
+def _ring_edges(v: np.ndarray) -> np.ndarray:
+    """(n, 2) vertices → the closed ring's flat edges [xa,ya,xb,yb]×n."""
+    return np.concatenate([v, np.roll(v, -1, axis=0)], axis=1).ravel()
+
+
+def _cover_ids(triples_per_row: list[list[tuple[int, int, int]]], level: int) -> list[list[int]]:
+    """Per-row (face, i, j) cover triples → per-row sorted unique cell ids
+    at ``level``, with ONE vectorized Hilbert encode for the whole Arrow
+    batch (encode dominated cost when done cell-at-a-time: 0.9 ms →
+    ~0.1 ms per building)."""
+    flat = [t for row in triples_per_row for t in row]
+    ids = np.empty(0, dtype=np.int64)  # all-empty batch: no covers at all
+    if flat:
+        arr = np.asarray(flat, dtype=np.int64)
+        leaf = C.cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2])
+        ids = C.cell_parent(leaf, level).astype(np.int64)
+    out, pos = [], 0
+    for row in triples_per_row:
+        out.append(sorted(set(ids[pos : pos + len(row)].tolist())))
+        pos += len(row)
+    return out
+
+
 def cover_polygon_udf(level: int):
     """rings (array<array<struct<lon,lat>>>) → array<long> cover cells."""
 
     @pandas_udf("array<long>")
     def cov(rings: pd.Series) -> pd.Series:
-        # per-polygon geometry tests in Python, but ONE vectorized Hilbert
-        # encode for the whole Arrow batch (encode dominated cost when done
-        # cell-at-a-time: 0.9 ms → ~0.1 ms per building)
-        triples_per_row: list[list[tuple[int, int, int]]] = []
-        for poly in rings:
-            if poly is None or len(poly) == 0:
-                triples_per_row.append([])
-                continue
-            py_rings = [[(p["lon"], p["lat"]) for p in ring] for ring in poly]
-            triples_per_row.append(C.cover_polygon_ij(py_rings, level))
-        flat = [t for row in triples_per_row for t in row]
-        ids = np.empty(0, dtype=np.int64)  # all-empty batch: no covers at all
-        if flat:
-            arr = np.asarray(flat, dtype=np.int64)
-            leaf = C.cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2])
-            ids = C.cell_parent(leaf, level).astype(np.int64)
-        out, pos = [], 0
-        for row in triples_per_row:
-            out.append(sorted(set(ids[pos : pos + len(row)].tolist())))
-            pos += len(row)
-        return pd.Series(out)
+        triples = [
+            C.cover_polygon_ij([_ring_vertices(r) for r in poly], level)
+            if poly is not None and len(poly) else []
+            for poly in rings
+        ]
+        return pd.Series(_cover_ids(triples, level))
 
     # see cell_encode_udf: optimizer fence against duplicate evaluation
     # (the tile explode otherwise pushes size(cover) > 0 below this)
@@ -132,18 +136,11 @@ def rings_to_edges_udf():
 
     @pandas_udf("array<double>")
     def to_edges(rings: pd.Series) -> pd.Series:
-        out = []
-        for poly in rings:
-            if poly is None or len(poly) == 0:
-                out.append([])
-                continue
-            segs = []
-            for ring in poly:
-                v = np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64)
-                nxt = np.roll(v, -1, axis=0)
-                segs.append(np.concatenate([v, nxt], axis=1).ravel())
-            out.append(np.concatenate(segs))
-        return pd.Series(out)
+        return pd.Series([
+            np.concatenate([_ring_edges(_ring_vertices(r)) for r in poly])
+            if poly is not None and len(poly) else []
+            for poly in rings
+        ])
 
     return to_edges
 
@@ -162,26 +159,10 @@ def cover_and_edges_udf(level: int):
                 covers.append([])
                 edges_out.append([])
                 continue
-            py_rings = []
-            segs = []
-            for ring in poly:
-                v = np.array([(p["lon"], p["lat"]) for p in ring], dtype=np.float64)
-                py_rings.append(v)
-                nxt = np.roll(v, -1, axis=0)
-                segs.append(np.concatenate([v, nxt], axis=1).ravel())
-            covers.append(C.cover_polygon_ij(py_rings, level))
-            edges_out.append(np.concatenate(segs))
-        flat = [t for row in covers for t in row]
-        ids = np.empty(0, dtype=np.int64)  # all-empty batch: no covers at all
-        if flat:
-            arr = np.asarray(flat, dtype=np.int64)
-            leaf = C.cell_from_face_ij(arr[:, 0], arr[:, 1], arr[:, 2])
-            ids = C.cell_parent(leaf, level).astype(np.int64)
-        cov_ids, pos = [], 0
-        for row in covers:
-            cov_ids.append(sorted(set(ids[pos : pos + len(row)].tolist())))
-            pos += len(row)
-        return pd.DataFrame({"cover": cov_ids, "edges": edges_out})
+            verts = [_ring_vertices(r) for r in poly]
+            covers.append(C.cover_polygon_ij(verts, level))
+            edges_out.append(np.concatenate([_ring_edges(v) for v in verts]))
+        return pd.DataFrame({"cover": _cover_ids(covers, level), "edges": edges_out})
 
     # see cell_encode_udf: without the fence, the explode's inferred
     # size(cover) > 0 predicate is pushed below the projection and THE
@@ -262,8 +243,10 @@ def salted_join(
     unsalted join (property-tested).
 
     The histogram job is a cheap partial-agg scan; the factors table is tiny
-    (only hot keys) and broadcast. This complements AQE's skew split, which
-    only applies to sort-merge joins post-shuffle.
+    (only hot keys) and broadcast. AQE's skew split (sort-merge and
+    shuffled-hash joins) acts on its own runtime thresholds; this path is
+    the explicit hot-cell handling the north rule asks for, with the hot
+    keys and salt factors fixed by ``hot_threshold`` and ``rows_per_task``.
 
     Only inner/left are supported: right/full would emit each UNMATCHED
     replicated build row once per salt value after ``_salt`` is dropped.
@@ -328,7 +311,6 @@ def pip_join(
     lat: str = "lat",
     rings: str = "rings",
     salt: bool = False,
-    broadcast_polygons: bool | None = None,
     **salt_kw,
 ) -> DataFrame:
     """Pair each point with every polygon containing it (J4).
@@ -346,16 +328,12 @@ def pip_join(
     polys = polys.select("*", F.col("_ce.cover").alias("_cover"),
                          F.col("_ce.edges").alias("_edges")).drop("_ce")
     polys = polys.withColumn("_cell", F.explode("_cover")).drop("_cover")
-    if broadcast_polygons:
-        polys = F.broadcast(polys)
-    elif not salt:
-        # see salted_join: never let a static misestimate broadcast the
-        # cover-exploded polygon side through the driver
-        polys = polys.hint("shuffle_hash")
     if salt:
         cand = salted_join(pts, polys, "_cell", F.col(lon), **salt_kw)
     else:
-        cand = pts.join(polys, "_cell")
+        # see salted_join: never let a static misestimate broadcast the
+        # cover-exploded polygon side through the driver
+        cand = pts.join(polys.hint("shuffle_hash"), "_cell")
     return (
         cand.where(pip_udf()(F.col(lon), F.col(lat), F.col("_edges")))
         .drop("_cell", "_edges")

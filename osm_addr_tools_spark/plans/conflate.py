@@ -190,9 +190,12 @@ def run_conflate(
     """
     from pyspark import StorageLevel
 
+    from osm_addr_tools_spark.operators.dedup import _PERSISTED_FP
+
     def pin(df: DataFrame) -> DataFrame:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         df.count()  # eager: prevents concurrent duplicate-evaluation races
+        _PERSISTED_FP.append(df)  # released via release_persisted_fp()
         return df
 
     a = addrs.where(F.col("geocoded")).drop("geocoded")
@@ -205,17 +208,10 @@ def run_conflate(
     # re-scan is a bare parquet read, ex is a UDF subtree feeding three
     # plan branches (key join, fuzzy vocab/candidates, nearest) — without
     # the pin the 100k-row normalization runs once per branch and the
-    # branches race. The eager count is one bounded job; the cache is
+    # branches race. The eager count is one bounded job; every pin is
     # released through the operators.dedup release registry, which
     # bench.py already drains after every timed run.
-    ex = keyed_existing(existing)
-    if pin_inputs:
-        ex = pin(ex)
-    else:
-        from osm_addr_tools_spark.operators.dedup import _PERSISTED_FP
-
-        ex = pin(ex)
-        _PERSISTED_FP.append(ex)
+    ex = pin(keyed_existing(existing))
     # min-node-per-key is an argmin, not a rank (r8): one partial-
     # aggregating min/min_by replaces the row_number window — map-side
     # combine shrinks the shuffle and the per-key sort disappears.

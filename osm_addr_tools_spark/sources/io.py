@@ -39,20 +39,6 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
     return df.select(*PAGES_COLUMNS)
 
 
-def write_pages(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write a pages table (parquet binding)."""
-    df.select(*PAGES_COLUMNS).write.mode(mode).parquet(path)
-
-
-def write_partitioned_by_cell(
-    df: DataFrame, path: str, cell_col: str = "cell_p", mode: str = "overwrite"
-) -> None:
-    """S3: cell-prefix-partitioned sink — gives readers static + dynamic
-    partition pruning on the spatial key and co-locates downstream cell
-    joins (SURVEY §4 partition-pruning row)."""
-    df.write.partitionBy(cell_col).mode(mode).parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

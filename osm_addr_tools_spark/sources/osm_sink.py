@@ -3,7 +3,7 @@
 Serializes the conflation matches table as OsmChange-style XML payloads —
 the output format the reference family emits for JOSM/upload tooling [R].
 Spark-first shape: one ``mapInPandas`` pass renders an XML fragment column
-(never ``toPandas()`` on the driver), then the standard text sink writes
+(never ``toPandas()`` on the driver) that the standard text sink writes as
 one shard per partition; a tiny driver-side wrapper adds the document
 envelope when a single file is requested.
 
@@ -108,17 +108,6 @@ def matches_to_osmchange(matches: DataFrame) -> DataFrame:
             yield pd.DataFrame({"kind": kinds, "xml": xmls})
 
     return df.mapInPandas(render, schema="kind string, xml string")
-
-
-def write_osmchange(matches: DataFrame, path: str) -> None:
-    """Write sharded OsmChange fragments: <path>/create/ and <path>/modify/
-    text parts (the distributed form; a consumer concatenates inside the
-    envelope <osmChange version="0.6">…</osmChange>)."""
-    frags = matches_to_osmchange(matches)
-    for kind in ("create", "modify"):
-        frags.where(F.col("kind") == kind).select("xml").write.mode(
-            "overwrite"
-        ).text(f"{path}/{kind}")
 
 
 def osmchange_document(matches: DataFrame) -> str:

@@ -93,3 +93,19 @@ def test_update_tags_merge(spark, golden):
     for r in dup:
         # duplicate = existing already complete; tags are the existing node's
         assert "source:addr" not in r.tags
+
+
+def test_run_conflate_pins_are_released(spark):
+    """run_conflate's eager pins (``a`` and ``ex`` under the default
+    pin_inputs=True) are registered for release_persisted_fp(), so a
+    long-lived session does not keep them cached after the run."""
+    from osm_addr_tools_spark.operators import dedup as D
+
+    D.release_persisted_fp()
+    n = 20
+    addrs = run_extract(spark, S.synth_pages(spark, n), S.synth_gazetteer(spark, n))
+    run_conflate(spark, addrs, S.synth_buildings(spark, n), S.synth_existing(spark, n))
+    pins = list(D._PERSISTED_FP)
+    assert len(pins) == 2 and all(p.is_cached for p in pins)
+    assert D.release_persisted_fp() == 2
+    assert not any(p.is_cached for p in pins)

@@ -408,3 +408,62 @@ def test_polygons_intersect_kernel_vs_convex_clip_reference(spark):
         want.append(clip_area(a, b) > 1e-12)
     got = kernel(pd.Series(ea), pd.Series(eb)).tolist()
     assert got == want
+
+
+_HOLED = [
+    [(21.0, 52.2), (21.004, 52.2), (21.004, 52.203), (21.0, 52.203)],
+    [(21.0015, 52.2011), (21.0025, 52.2011), (21.0025, 52.2019), (21.0015, 52.2019)],
+]
+_SEAM = [[(44.9998, 10.0), (45.0002, 10.0), (45.0002, 10.0003), (44.9998, 10.0003)]]
+_SUBCELL = [[(21.00001, 52.20001), (21.00002, 52.20001), (21.00002, 52.20002)]]
+_KERNEL_CASES = {1: None, 2: [], 3: _HOLED, 4: _SEAM, 5: _SUBCELL}
+
+
+@pytest.mark.parametrize("udf", ["cover_polygon", "rings_to_edges", "cover_and_edges"])
+def test_polygon_udfs_match_cell_kernel_and_edge_reference(spark, udf):
+    """The three polygon UDFs share one ring/edge/cover kernel; each must
+    agree row for row with cells.cover_polygon (cover) and a per-edge
+    closed-ring reference (edges) on NULL rings, empty rings, a holed
+    polygon, a face-seam polygon and a polygon smaller than one cell."""
+    from osm_addr_tools_spark.functions import cells as C
+    from osm_addr_tools_spark.operators import joins as J
+
+    level = 19
+    df = spark.createDataFrame(
+        [
+            (pid, None if rings is None else [
+                [{"lon": x, "lat": y} for (x, y) in ring] for ring in rings
+            ])
+            for pid, rings in _KERNEL_CASES.items()
+        ],
+        "id long, rings array<array<struct<lon:double,lat:double>>>",
+    )
+    rings = F.col("rings")
+    if udf == "cover_polygon":
+        out = df.select("id", J.cover_polygon_udf(level)(rings).alias("cover"))
+    elif udf == "rings_to_edges":
+        out = df.select("id", J.rings_to_edges_udf()(rings).alias("edges"))
+    else:
+        out = df.select("id", J.cover_and_edges_udf(level)(rings).alias("ce")).select(
+            "id", "ce.cover", "ce.edges"
+        )
+    got = {r.id: r.asDict() for r in out.collect()}
+    assert sorted(got) == sorted(_KERNEL_CASES)
+    for pid, poly in _KERNEL_CASES.items():
+        poly = poly or []
+        if "cover" in got[pid]:
+            assert got[pid]["cover"] == C.cover_polygon(poly, level).tolist(), pid
+        if "edges" in got[pid]:
+            ref = [
+                c
+                for ring in poly
+                for k in range(len(ring))
+                for c in (*ring[k], *ring[(k + 1) % len(ring)])
+            ]
+            assert list(got[pid]["edges"]) == ref, pid
+    seam_faces = {c >> 61 for c in C.cover_polygon(_SEAM, level).tolist()}
+    assert seam_faces == {0, 1}
+    assert len(C.cover_polygon(_SUBCELL, level)) >= 1
+    assert set(C.cover_polygon(_HOLED, level).tolist()) < set(
+        C.cover_polygon(_HOLED[:1], level).tolist()
+    )

@@ -1,17 +1,19 @@
-"""Dump formatted physical plans of the headline queries to BENCH/PLANS.md."""
-import sys, re
-sys.path.insert(0, '/root/repo')
-from pyspark.sql import SparkSession, functions as F
+"""Dump formatted physical plans of the headline queries to BENCH/PLANS.md.
 
-spark = (SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions","16")
-    .config("spark.sql.adaptive.enabled","true")
-    .config("spark.ui.enabled","false").getOrCreate())
+Usage: python tools/gen_plans.py
+The session is bench.py's (``build_spark`` on local[$SPARK_GRAFT_CPUS],
+default 8), so the plans are the ones the bench executes.
+"""
+import os, sys, re
+root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, root)
+
+from bench import bench_queries, build_spark  # noqa: E402
+
+spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
 spark.sparkContext.setLogLevel("ERROR")
 
-from osm_addr_tools_spark import queries as Q
-from osm_addr_tools_spark.plans.conflate import run_conflate
-from bench import bench_queries
+from osm_addr_tools_spark import queries as Q  # noqa: E402
 
 base = "/tmp/spark_graft_bench_0.1_100000"
 qs = bench_queries(spark, "/root/testdata/sf0.1", 100000, base)
@@ -78,7 +80,7 @@ targets = {
     "docs_spans_applied (span-removal applier)": Q.QUERIES["docs_spans_applied"](spark, "/root/testdata/sf0.1"),
 }
 
-with open("/root/repo/BENCH/PLANS.md", "w") as f:
+with open(os.path.join(root, "BENCH", "PLANS.md"), "w") as f:
     f.write("""# BENCH/PLANS — physical-plan audit of the headline queries
 
 Generated by tools/gen_plans.py (Spark `explain("formatted")`, AQE on,
