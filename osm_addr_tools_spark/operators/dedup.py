@@ -813,19 +813,22 @@ def connected_components(
     vertex ids — per-vertex state, no hot keys beyond input skew (a
     celebrity vertex's edge fan-in is combined map-side by the min agg).
 
-    Driver-side work: one scalar convergence count per materialization
-    (bounded metadata action, ≤ ``max_iter`` rounds total) and a
-    localCheckpoint of the new label table (truncating BOTH lineage and
-    the logical plan — iterative plans otherwise grow ~3× per round and
-    long-chain graphs OOM the driver during analysis; see the loop
-    comment). The in-memory path reads the convergence flag off each
-    round's cached blocks, cutting the driver's per-round job count — the
-    dominant cost of the loop at small-to-medium graph sizes (rounds are
-    scheduling-latency-bound, not data-bound).
+    One round loop serves both paths; they differ only in how each round's
+    label table is materialized. Driver-side work: one scalar convergence
+    count per round (bounded metadata action, ≤ ``max_iter`` rounds total)
+    over the materialized table, which carries the round's convergence flag
+    — no separate convergence join job. Without ``checkpoint_dir`` the
+    table is localCheckpoint'ed (truncating BOTH lineage and the logical
+    plan — iterative plans otherwise grow ~3× per round and long-chain
+    graphs OOM the driver during analysis; see the loop comment). The
+    driver's per-round job count is the dominant cost of the loop at
+    small-to-medium graph sizes (rounds are scheduling-latency-bound, not
+    data-bound).
 
-    ``checkpoint_dir`` (VERDICT r3 #6 — the production shape): write each
-    round's label table through the S5 manifest sink (plans/manifest.py,
-    bucketed on ``pmod(u, checkpoint_buckets)``) and read it back, which
+    ``checkpoint_dir`` (VERDICT r3 #6 — the production shape): instead of
+    localCheckpoint, write each round's label table (with its convergence
+    flag) through the S5 manifest sink (plans/manifest.py, bucketed on
+    ``pmod(u, checkpoint_buckets)``) and read it back, which
     (a) truncates lineage DURABLY — a driver restart does not re-run
     earlier rounds — and (b) makes the job resumable: on re-invocation the
     highest round whose manifest append completed is reloaded and
@@ -874,21 +877,13 @@ def connected_components(
 
     def _ckpt_write(df: DataFrame, rnd: int) -> DataFrame:
         out = f"{ck_root}/round={rnd}"
-        stats = M.write_resumable(
-            spark,
-            df.withColumn("_part", F.pmod(F.col("u"), F.lit(checkpoint_buckets))),
-            out,
-            stage=f"cc_round_{rnd}",
-            conf=cc_conf,
-            part_col="_part",
+        df = df.withColumn("_part", F.pmod(F.col("u"), F.lit(checkpoint_buckets)))
+        M.write_resumable(
+            spark, df, out, stage=f"cc_round_{rnd}", conf=cc_conf, part_col="_part"
         )
-        if stats["planned"] == 0:
-            # ADVICE r4: an empty label table has no partitions, so
-            # write_resumable creates no path — reading it back would
-            # throw. The input IS the (empty) result; lineage truncation
-            # is moot for zero rows.
-            return df.select("u", "lbl")
-        return spark.read.parquet(out).select("u", "lbl")
+        # read with the round's schema: an empty label table (no edges)
+        # writes no partition and reads back as empty
+        return spark.read.schema(df.schema).parquet(out)
 
     start_round = 0
     labels = None
@@ -948,65 +943,50 @@ def connected_components(
     # non-convergence raise (or any mid-round failure) must not pin the
     # persisted |edges| table for the rest of the session (ADVICE r5 —
     # same slow-leak class as the r5 release_persisted_fp fix).
+    #
+    # The loop is tuned for driver-loop latency: per materialization it
+    # (a) folds the identity-label init into a special-cased first round
+    # (lbl = min(u, min neighbor) is one groupBy — no init job, no joins —
+    # and, since it references ``e`` exactly once, it is also what
+    # materializes the persist cache without concurrent duplicate
+    # evaluation), (b) carries the convergence flag INSIDE the
+    # materialized frame, so the per-round convergence count scans cached
+    # blocks (or the round's parquet) instead of running a separate join
+    # job, and (c) materializes every round: Spark has no common-subtree
+    # elimination, so a plan holding k un-materialized rounds re-computes
+    # the inner ones 2-3× (r8 measured 4× the wall at 3 rounds per
+    # checkpoint); one round per materialization references only
+    # materialized leaves. The in-memory path materializes by
+    # localCheckpoint, the durable path by a manifest write + read-back
+    # (one round per write, so resume stays per-round).
     try:
-        if checkpoint_dir is not None:
-            # durable path: one round per manifest write (resume stays
-            # per-round); the parquet round-trip truncates the plan.
+        for rnd in range(start_round + 1, start_round + max_iter + 1):
             if labels is None:
-                labels = e.select("u").distinct().withColumn("lbl", F.col("u"))
-            for rnd in range(start_round + 1, start_round + max_iter + 1):
-                new = _ckpt_write(_round(labels), rnd)
-                changed = (
-                    new.join(labels.withColumnRenamed("lbl", "_old"), "u")
-                    .where(F.col("lbl") != F.col("_old"))
-                    .count()
-                )
-                labels = new
-                if changed == 0:
-                    break
+                # round 1 from identity labels: nbr-min is min(v) and the
+                # pointer jump through identity is a no-op
+                cmp = e.groupBy("u").agg(
+                    F.least(F.col("u"), F.min("v")).alias("lbl")
+                ).select("u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg"))
             else:
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} rounds"
-                )
-        else:
-            # in-memory path, tuned for driver-loop latency: per
-            # materialization it (a) folds the identity-label init into a
-            # special-cased first round (lbl = min(u, min neighbor) is one
-            # groupBy — no init job, no joins — and, since it references
-            # ``e`` exactly once, it is also what materializes the persist
-            # cache without concurrent duplicate evaluation), (b) carries
-            # the convergence flag INSIDE the checkpointed frame, so the
-            # per-round convergence count scans cached blocks instead of
-            # running a separate join job, and (c) checkpoints every round:
-            # Spark has no common-subtree elimination, so a plan holding k
-            # un-materialized rounds re-computes the inner ones 2-3× (r8
-            # measured 4× the wall at 3 rounds per checkpoint); one round
-            # per localCheckpoint references only cached leaves.
-            labels = None  # None = implicit identity labels (lbl(u) = u)
-            for _ in range(max_iter):
-                if labels is None:
-                    # round 1 from identity labels: nbr-min is min(v)
-                    # and the pointer jump through identity is a no-op
-                    cmp = e.groupBy("u").agg(
-                        F.least(F.col("u"), F.min("v")).alias("lbl")
-                    ).select("u", "lbl", (F.col("lbl") != F.col("u")).alias("_chg"))
-                else:
-                    cmp = (
-                        _round(labels)
-                        .join(labels.withColumnRenamed("lbl", "_old"), "u")
-                        .select(
-                            "u", "lbl",
-                            (F.col("lbl") != F.col("_old")).alias("_chg"),
-                        )
+                cmp = (
+                    _round(labels)
+                    .join(labels.withColumnRenamed("lbl", "_old"), "u")
+                    .select(
+                        "u", "lbl",
+                        (F.col("lbl") != F.col("_old")).alias("_chg"),
                     )
-                ck = cmp.localCheckpoint()
-                labels = ck.select("u", "lbl")
-                if ck.where(F.col("_chg")).count() == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} rounds"
                 )
+            if checkpoint_dir is None:
+                ck = cmp.localCheckpoint()
+            else:
+                ck = _ckpt_write(cmp, rnd)
+            labels = ck.select("u", "lbl")
+            if ck.where(F.col("_chg")).count() == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
     finally:
         e.unpersist()
     # the final label table is already materialized (localCheckpoint /

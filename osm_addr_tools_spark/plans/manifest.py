@@ -12,9 +12,18 @@ resumable across driver restarts):
   readers ignore it) is appended ONLY after a write job succeeds, one row
   per completed partition key: (stage, config_hash, part value, rows,
   metric columns, wall_ms);
-* resume = anti-join of the input's partition keys against the manifest
-  keys for (stage, config_hash) — completed partitions are never
-  recomputed; a config change (different config_hash) invalidates resume.
+* resume = an in-plan ``left_anti`` join of the input against the
+  manifest's completed keys for (stage, config_hash), broadcast (one row
+  per partition) — completed partitions are never recomputed, and nothing
+  is collected to the driver to plan the write; a config change (different
+  config_hash) invalidates resume;
+* the input is evaluated exactly once, by the write job. The manifest's
+  per-partition ``rows``/``matched`` and the returned stats come from a
+  column-pruned read-back of exactly the partitions this call wrote: the
+  data files present after the write and absent before it (file names
+  carry the write job's UUID). Partitions the directory holds from another
+  config are neither read nor recorded. ``skipped`` is the number of
+  partitions the manifest already records for (stage, config_hash).
 
 Crash window: if the job dies between the data write and the manifest
 append, the partitions are rewritten on resume (identical bytes — the
@@ -46,17 +55,28 @@ def config_hash(conf: dict) -> str:
     ).hexdigest()[:16]
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = os.path.join(out_dir, MANIFEST_DIR)
+def _read_or_none(spark: SparkSession, schema, path: str) -> DataFrame | None:
     try:
-        return spark.read.schema(_MANIFEST_SCHEMA).parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
-        # absent manifest (fresh job) → None; anything else (storage
-        # errors, corruption) raises — treating it as "no manifest" would
-        # silently re-run every completed partition of a 100 TB job
+        # absent path (fresh job) → None; anything else (storage errors,
+        # corruption) raises — treating it as "no manifest" would silently
+        # re-run every completed partition of a 100 TB job
         if "PATH_NOT_FOUND" not in str(e):
             raise
         return None
+
+
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    return _read_or_none(spark, _MANIFEST_SCHEMA, os.path.join(out_dir, MANIFEST_DIR))
+
+
+def append_manifest(spark: SparkSession, out_dir: str, rows: list[tuple]) -> None:
+    """Append completed-partition rows, each
+    (stage, config_hash, part, rows, matched, wall_ms)."""
+    spark.createDataFrame(rows, _MANIFEST_SCHEMA).write.mode("append").parquet(
+        os.path.join(out_dir, MANIFEST_DIR)
+    )
 
 
 def completed_parts(
@@ -72,6 +92,11 @@ def completed_parts(
     )
 
 
+def _data_files(spark: SparkSession, schema, out_dir: str) -> set[str]:
+    d = _read_or_none(spark, schema, out_dir)
+    return set(d.inputFiles()) if d is not None else set()
+
+
 def write_resumable(
     spark: SparkSession,
     df: DataFrame,
@@ -82,56 +107,61 @@ def write_resumable(
     matched_pred=None,
 ) -> dict:
     """Write ``df`` partitioned by ``part_col``, skipping partitions already
-    recorded in the manifest for (stage, config_hash(conf)).
+    recorded in the manifest for (stage, config_hash(conf)). ``df`` is
+    evaluated once, by the write job.
 
-    Returns {"planned": n, "skipped": n, "written": n, "rows": n}.
+    Returns {"planned", "skipped", "written", "rows"}: ``skipped`` counts
+    the partitions the manifest already records for (stage, config_hash),
+    ``written`` the partitions this call wrote, ``planned`` their sum and
+    ``rows`` the rows read back from the written partitions.
     ``matched_pred``: optional Column → per-partition ``matched`` count
-    (match-rate metric in the manifest).
+    (match-rate metric in the manifest); it is evaluated on the read-back,
+    so it must name ``df``'s columns, not hold references bound to ``df``.
     """
     cfg = config_hash(conf)
     done = completed_parts(spark, out_dir, stage, cfg)
-    if done is not None:
-        done_keys = [r.part for r in done.collect()]  # small: partition keys only
-    else:
-        done_keys = []
+    skipped = done.count() if done is not None else 0
+    if skipped:
+        done = F.broadcast(done.withColumnRenamed("part", "_done"))
+        df = df.join(done, F.col(part_col).eqNullSafe(F.col("_done")), "left_anti")
 
-    planned = [r.part for r in df.select(F.col(part_col).alias("part")).distinct().collect()]
-    todo = sorted(set(planned) - set(done_keys))
-    stats = {
-        "planned": len(planned),
-        "skipped": len(planned) - len(todo),
-        "written": len(todo),
-        "rows": 0,
-    }
-    if not todo:
-        return stats
-
-    work = df.where(F.col(part_col).isin(todo))
+    before = _data_files(spark, df.schema, out_dir)
     t0 = time.perf_counter()
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        work.write.partitionBy(part_col).mode("overwrite").parquet(out_dir)
+        df.write.partitionBy(part_col).mode("overwrite").parquet(out_dir)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
-    matched_expr = (
-        F.sum(F.when(matched_pred, 1).otherwise(0))
-        if matched_pred is not None
-        else F.lit(0)
-    )
-    metrics = (
-        work.groupBy(F.col(part_col).alias("part"))
-        .agg(F.count(F.lit(1)).alias("rows"), matched_expr.cast("long").alias("matched"))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("config_hash", F.lit(cfg))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .select("stage", "config_hash", "part", "rows", "matched", "wall_ms")
-    )
-    metrics.write.mode("append").parquet(os.path.join(out_dir, MANIFEST_DIR))
-    stats["rows"] = work.count()
-    return stats
+    # data file names carry the write job's UUID and dynamic overwrite
+    # replaces a written partition's directory whole, so the new files are
+    # exactly the partitions this call wrote
+    new = sorted(_data_files(spark, df.schema, out_dir) - before)
+    metrics = []
+    if new:
+        matched_expr = (
+            F.sum(F.when(matched_pred, 1).otherwise(0))
+            if matched_pred is not None
+            else F.lit(0)
+        )
+        metrics = (
+            spark.read.schema(df.schema).option("basePath", out_dir).parquet(*new)
+            .groupBy(F.col(part_col).alias("part"))
+            .agg(F.count(F.lit(1)).alias("rows"), matched_expr.cast("long").alias("matched"))
+            .collect()
+        )
+        append_manifest(
+            spark, out_dir,
+            [(stage, cfg, r.part, r.rows, r.matched, wall_ms) for r in metrics],
+        )
+    return {
+        "planned": skipped + len(metrics),
+        "skipped": skipped,
+        "written": len(metrics),
+        "rows": sum(r.rows for r in metrics),
+    }
 
 
 def with_part_col(

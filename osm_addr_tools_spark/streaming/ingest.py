@@ -455,7 +455,7 @@ def ingest_batches_resumable(
     import time as _time
 
     from osm_addr_tools_spark.plans.manifest import (
-        MANIFEST_DIR,
+        append_manifest,
         completed_parts,
         config_hash,
     )
@@ -478,8 +478,6 @@ def ingest_batches_resumable(
         "written": len(todo),
         "rows": 0,
     }
-    import os as _os
-
     for b in todo:
         batch_df = docs.where(F.col(batch_col) == b).drop(batch_col)
         t0 = _time.perf_counter()
@@ -488,14 +486,9 @@ def ingest_batches_resumable(
             threshold=threshold, **minhash_kw,
         )
         wall_ms = int((_time.perf_counter() - t0) * 1000)
-        row = spark.createDataFrame(
-            [("incremental_dedup", cfg, int(b), bstats["rows"],
-              bstats["kept"], wall_ms)],
-            "stage string, config_hash string, part long, rows long, "
-            "matched long, wall_ms long",
-        )
-        row.write.mode("append").parquet(
-            _os.path.join(ledger_path, MANIFEST_DIR)
+        append_manifest(
+            spark, ledger_path,
+            [("incremental_dedup", cfg, int(b), bstats["rows"], bstats["kept"], wall_ms)],
         )
         stats["rows"] += bstats["rows"]
     return stats

@@ -425,7 +425,8 @@ def test_connected_components_chain_and_islands(spark):
     assert got[21] == 10 and got[3] == 1 and got[60] == 50
 
 
-def test_connected_components_random_vs_union_find(spark):
+@pytest.mark.parametrize("durable", [False, True], ids=["in_memory", "checkpoint_dir"])
+def test_connected_components_random_vs_union_find(spark, tmp_path, durable):
     rng = np.random.default_rng(11)
     edges = [
         (int(a), int(b))
@@ -433,7 +434,11 @@ def test_connected_components_random_vs_union_find(spark):
         if a != b
     ]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-    got = {r.v: r.component for r in D.connected_components(df).collect()}
+    ck = str(tmp_path / "cc") if durable else None
+    got = {
+        r.v: r.component
+        for r in D.connected_components(df, checkpoint_dir=ck).collect()
+    }
     assert got == _uf_components(edges)
 
 

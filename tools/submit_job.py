@@ -6,7 +6,11 @@ Packages the engine and runs a full resumable pipeline stage:
     zip -r engine.zip osm_addr_tools_spark/
     spark-submit --py-files engine.zip tools/submit_job.py \\
         --stage conflate --n-pages 100000 --out /data/matches \\
-        [--pages parquet:/data/pages] [--salt] [--resume]
+        [--pages parquet:/data/pages] [--salt]
+
+Re-running with the same arguments resumes: the manifest's config hash is
+taken over the arguments, so the re-run skips the partitions the killed
+run completed (any changed argument starts the stage over).
 
 Stages:
   extract   pages → geocoded address points (EP1)
