@@ -575,8 +575,6 @@ def simhash_candidates(
     fp: DataFrame,
     max_hamming: int,
     blocks: int | None = None,
-    salt: bool = False,
-    **salt_kw,
 ) -> DataFrame:
     """Candidate (a, b) pairs (a < b, deduplicated) that MAY be within
     ``max_hamming`` — 100% recall by pigeonhole, precision filtered by the
@@ -601,8 +599,7 @@ def simhash_candidates(
 
     Candidates travel light: only (a, b) flows through the subset join and
     the pair dedup (fingerprints re-join by id afterwards — the minhash
-    r2 #8 treatment). ``salt=True`` routes the key join through the J3
-    salted join (hot key = a boilerplate block pattern shared by k docs).
+    r2 #8 treatment).
 
     Key representation: blocks are CONTIGUOUS bit ranges of the
     fingerprint, so "agrees on every block of subset S" ⟺ equal
@@ -638,7 +635,7 @@ def simhash_candidates(
         for j in c:
             m |= block_bits[j]
         masks64.append(int(np.int64(np.uint64(m))))  # signed long literal
-    # Both paths key on xxhash64(mask, fp & mask) — one 8-byte column
+    # The join keys on xxhash64(mask, fp & mask) — one 8-byte column
     # instead of the (mask, masked-fp) 16-byte pair (r8: the candidate
     # join is this operator's single heaviest shuffle; the fold cut its
     # row width 24 → 16 bytes and measured 3.28 → 2.65 s at bench scale
@@ -657,12 +654,7 @@ def simhash_candidates(
     )
     lhs = keyed.select(F.col("_id").alias("a"), "_k")
     rhs = keyed.select(F.col("_id").alias("b"), "_k")
-    if salt:
-        from osm_addr_tools_spark.operators.joins import salted_join
-
-        cand = salted_join(lhs, rhs, "_k", F.col("a"), **salt_kw)
-    else:
-        cand = lhs.join(rhs.hint("shuffle_hash"), "_k")
+    cand = lhs.join(rhs.hint("shuffle_hash"), "_k")
     return (
         cand.where(F.col("a") < F.col("b"))
         .select("a", "b")
@@ -677,8 +669,6 @@ def simhash_pairs(
     text_col: str = "text",
     fp_col: str | None = None,
     blocks: int | None = None,
-    salt: bool = False,
-    **salt_kw,
 ) -> DataFrame:
     """Pairs with simhash hamming distance ≤ max_hamming (a < b). EXACT
     (100% recall): multi-block pigeonhole banding generates candidates
@@ -695,7 +685,7 @@ def simhash_pairs(
     # after materializing the returned pairs (ADVICE r4 leak note).
     fp = _simhash_fp(df, id_col, text_col, fp_col).persist()
     _PERSISTED_FP.append(fp)
-    cand = simhash_candidates(fp, max_hamming, blocks=blocks, salt=salt, **salt_kw)
+    cand = simhash_candidates(fp, max_hamming, blocks=blocks)
     cand = cand.join(
         fp.select(F.col("_id").alias("a"), F.col("_fp").alias("fp_a")), "a"
     ).join(fp.select(F.col("_id").alias("b"), F.col("_fp").alias("fp_b")), "b")
@@ -718,8 +708,6 @@ def winnow_partial_dups(
     id_col: str = "doc_id",
     fp_col: str = "fp",
     stop_fp_df: int | None = None,
-    salt: bool = False,
-    **salt_kw,
 ) -> DataFrame:
     """Partial-duplicate pairs over winnowing fingerprints (a < b):
     containment = |shared fp| / min(|fp_a|, |fp_b|) ≥ threshold, fp sets
@@ -734,9 +722,7 @@ def winnow_partial_dups(
     corpus hits. Dropping them BEFORE the per-doc counts keeps containment
     exact over the post-filter fp sets (removed fps leave both the
     intersection and the min() denominator consistently); AQE picks the
-    hot-set anti-join strategy as in ngram_jaccard_pairs. ``salt=True`` routes
-    the fp join through the J3 salted join for residual hot values under
-    the cap.
+    hot-set anti-join strategy as in ngram_jaccard_pairs.
     """
     # The distinct (id, fp) table feeds FOUR plan branches (hot-fp
     # histogram, per-doc counts, both join sides), so any UDF upstream of
@@ -758,12 +744,7 @@ def winnow_partial_dups(
     cnt = u.groupBy("_id").agg(F.count(F.lit(1)).alias("nf"))
     lhs = u.select(F.col("_id").alias("a"), "fp")
     rhs = u.select(F.col("_id").alias("b"), "fp")
-    if salt:
-        from osm_addr_tools_spark.operators.joins import salted_join
-
-        joined = salted_join(lhs, rhs, "fp", F.col("a"), **salt_kw)
-    else:
-        joined = lhs.join(rhs.hint("shuffle_hash"), "fp")
+    joined = lhs.join(rhs.hint("shuffle_hash"), "fp")
     shared = (
         joined.where(F.col("a") < F.col("b"))
         .groupBy("a", "b")

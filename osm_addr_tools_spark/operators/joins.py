@@ -247,6 +247,9 @@ def salted_join(
     shuffled-hash joins) acts on its own runtime thresholds; this path is
     the explicit hot-cell handling the north rule asks for, with the hot
     keys and salt factors fixed by ``hot_threshold`` and ``rows_per_task``.
+    Callers: ``salt=True`` on the spatial cell joins (``pip_join``,
+    ``knn_join``, ``polygon_join``); ``run_conflate`` forwards its ``salt``
+    to the first two.
 
     Only inner/left are supported: right/full would emit each UNMATCHED
     replicated build row once per salt value after ``_salt`` is dropped.
@@ -739,9 +742,6 @@ def band_join(
     left_val: str,
     right_val: str,
     band: float,
-    salt: bool = False,
-    probe_col: Column | None = None,
-    **salt_kw,
 ) -> DataFrame:
     """Pairs with ``|left_val - right_val| <= band`` — the J8 theta→equi
     rule as a reusable operator (the 1-D analogue of the cell kNN join):
@@ -757,9 +757,6 @@ def band_join(
     non-dyadic band can round x/band across an integer boundary and drop a
     boundary-equal pair that the residual (computed on the raw values)
     would keep.
-
-    ``salt=True`` routes the bucket join through J3 for value-clustered
-    inputs (a price spike = a hot bucket), salting on ``probe_col``.
     """
     m, e = np.frexp(band)
     if not (band > 0 and m == 0.5):
@@ -780,12 +777,7 @@ def band_join(
     rb = right.withColumn(
         "_bucket", F.floor(F.col(right_val) / F.lit(float(band))).cast("long")
     )
-    if salt:
-        if probe_col is None:
-            probe_col = F.col(left_val)
-        pairs = salted_join(lb, rb.hint("shuffle_hash"), "_bucket", probe_col, **salt_kw)
-    else:
-        pairs = lb.join(rb.hint("shuffle_hash"), "_bucket")
+    pairs = lb.join(rb.hint("shuffle_hash"), "_bucket")
     return pairs.where(
         F.abs(F.col(left_val) - F.col(right_val)) <= F.lit(float(band))
     ).drop("_bucket")

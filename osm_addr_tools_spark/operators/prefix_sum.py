@@ -28,8 +28,7 @@ window pass could silently disagree on bucket assignment, while a pure
 function of the key cannot. Correctness never depends on bucket
 boundaries (any monotone bucketing yields the identical running sum —
 property-tested); skewed keys only IMBALANCE buckets. For heavy skew,
-pass ``boundaries="auto"`` (one approxQuantile pass → equi-depth
-buckets; see ``auto_boundaries``) or an explicit ascending cut list.
+pass an explicit ascending cut list (equi-depth buckets).
 """
 
 from __future__ import annotations
@@ -54,52 +53,29 @@ def _uniform_bucket(key, kmin: float, kmax: float, nb: int):
 
 def _boundary_bucket(key, boundaries: list):
     """Equi-depth bucket id = #boundaries ≤ key (boundaries sorted
-    ascending, e.g. from approxQuantile). O(len(boundaries)) JVM array
+    ascending). O(len(boundaries)) JVM array
     filter per row — fine for the ≤ few-thousand boundaries that make
     sense here."""
     arr = F.array(*[F.lit(b) for b in sorted(boundaries)])
     return F.size(F.filter(arr, lambda x: x <= key)).cast("int")
 
 
-def auto_boundaries(df: DataFrame, order_col: str, num_buckets: int) -> list:
-    """Equi-depth bucket boundaries for ``running_sum(boundaries="auto")``:
-    the (i/num_buckets)-quantiles of the order key via approxQuantile (one
-    distributed GK-sketch pass; relative error a quarter-bucket, so no
-    bucket can exceed ~1.5× its equi-depth share from sketch error alone).
-    Heavy skew — many rows tying on one key value — collapses adjacent
-    boundaries; ties are indivisible by a monotone bucketing, so that
-    residual imbalance is irreducible, and correctness never depends on
-    balance (any monotone bucketing yields the identical running sum)."""
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    rel_err = max(1e-4, 0.25 / num_buckets)
-    return (
-        df.select(F.col(order_col).cast("double").alias("_k"))
-        .dropna()
-        .approxQuantile("_k", probs, rel_err)
-    )
-
-
 def _resolve_bucket(df: DataFrame, order_col: str, num_buckets: int, boundaries):
     """Monotone bucket-id Column for ``order_col`` (shared by running_sum
     and grouped_row_number). ``boundaries``: None → uniform range buckets
-    over one min/max aggregate; ``"auto"`` → equi-depth via
-    ``auto_boundaries``; a list → explicit ascending cuts. Null keys yield
+    over one min/max aggregate; a list → explicit ascending cuts (doubles,
+    compared against the double view of the key). Null keys yield
     a NULL bucket (never clamp into a valid one): F.least/F.greatest skip
     nulls and the boundary filter drops null comparisons, so without the
     final guard null keys would silently land in a bucket with wrong
     offsets — the partials pass raises on them instead."""
     key = F.col(order_col)
-    if isinstance(boundaries, str):
-        if boundaries != "auto":
-            raise ValueError(f"boundaries must be a list or 'auto'; got {boundaries!r}")
-        boundaries = auto_boundaries(df, order_col, num_buckets)
-
     if boundaries is not None:
         # compare against the DOUBLE view of the key (ADVICE r6): the
-        # boundary literals are doubles (approxQuantile sketches the
-        # double-cast key), so a raw timestamp/date key would miscast or
-        # fail under ANSI — the same view the uniform path already uses,
-        # and double casting is monotone, which is all bucketing needs
+        # boundary literals are doubles (timestamps as epoch seconds), so
+        # a raw timestamp/date key would miscast or fail under ANSI — the
+        # same view the uniform path already uses, and double casting is
+        # monotone, which is all bucketing needs
         bucket = _boundary_bucket(key.cast("double"), boundaries)
     else:
         # min/max over the DOUBLE view of the key: keeps the driver-side
@@ -142,9 +118,8 @@ def running_sum(
     free — null keys surface as a null bucket in the partials pass.
 
     ``boundaries``: explicit ascending cut points for equi-depth
-    bucketing, or ``"auto"`` to derive them from one approxQuantile pass
-    over the order key (heavily skewed keys starve uniform range buckets;
-    equi-depth keeps every stage balanced — see ``auto_boundaries``).
+    bucketing (heavily skewed keys starve uniform range buckets;
+    equi-depth keeps every stage balanced); None → uniform range buckets.
     Output is identical under ANY monotone bucketing (property-tested).
 
     The ``df`` subtree is evaluated twice (partials pass + window pass) —

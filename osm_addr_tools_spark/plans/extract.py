@@ -2,14 +2,15 @@
 
 Plan shape (and why):
 
-  scan(pages) → [lang filter — sargable, pushed to parquet]
+  scan(pages)
   → as-of latest per url (J7 window; re-crawled urls keep newest snapshot)
   → X1 extract_text (ONE ArrowEvalPython stage)
   → X2 parse + F1/F2/F4 normalize fused into ONE pandas UDF returning
     array<struct> (SURVEY §4: fuse UDF stages, codegen breaks at each
     ArrowEvalPythonExec) → explode
-  → X3 geocode = broadcast equi-join against the gazetteer (NOT a UDF —
-    keeps it a Catalyst-planned join)
+  → X3 geocode = left equi-join against the gazetteer (NOT a UDF —
+    keeps it a Catalyst-planned join; un-hinted, so AQE picks broadcast
+    or shuffle from the gazetteer's size)
 
 `html` is pruned immediately after X1 (never carried through a shuffle —
 SURVEY §7.4.4 Arrow-batch memory rule).
@@ -76,25 +77,15 @@ def parse_and_normalize_udf():
     return x2.asNondeterministic()
 
 
-def run_extract(
-    spark,
-    pages: DataFrame,
-    gazetteer: DataFrame,
-    lang_filter: list[str] | None = None,
-    dedupe_crawls: bool = True,
-    broadcast_gazetteer: bool | None = None,
-) -> DataFrame:
+def run_extract(spark, pages: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) × gazetteer → address points.
 
     Returns (url, warc_ts, addr_key, city, street, housenumber, postcode,
     street_norm, hn_norm, lon, lat, geocoded). Ungecoded rows (gazetteer
     miss) carry null lon/lat and geocoded=false.
     """
-    df = pages.select("url", "warc_ts", "html", "lang")
-    if lang_filter:
-        df = df.where(F.col("lang").isin(lang_filter))
-    if dedupe_crawls:
-        df = asof_latest(df, "url", "warc_ts")
+    # ``lang`` rides along only as asof_latest's last tie-break column
+    df = asof_latest(pages.select("url", "warc_ts", "html", "lang"), "url", "warc_ts")
     df = df.withColumn("text", extract_text_udf()("html")).drop("html", "lang")
     df = df.withColumn("addr", F.explode(parse_and_normalize_udf()("text"))).drop("text")
     df = df.select(
@@ -116,10 +107,7 @@ def run_extract(
         F.col("lon"),
         F.col("lat"),
     )
-    # None = let Catalyst/AQE pick (broadcasts under the size threshold,
-    # shuffle-join otherwise — measured faster for multi-100k-row gazetteers);
-    # True forces the hint for genuinely small dimension tables.
-    if broadcast_gazetteer:
-        gaz = F.broadcast(gaz)
+    # no hint: Catalyst/AQE broadcasts under the size threshold and
+    # shuffle-joins otherwise (measured faster for multi-100k-row gazetteers)
     out = df.join(gaz, ["city_norm", "street_norm", "hn_norm"], "left")
     return out.withColumn("geocoded", F.col("lon").isNotNull())

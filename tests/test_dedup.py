@@ -254,20 +254,6 @@ def test_simhash_multiblock_cuts_candidate_volume(spark):
     assert multi * 20 < chunked, (multi, chunked)
 
 
-def test_simhash_salted_equals_unsalted(spark, docs_with_planted):
-    """salt=True routes the subset-key join through J3; the pair set must
-    be row-identical (r3 #8)."""
-    plain = D.simhash_pairs(docs_with_planted, max_hamming=6, blocks=12).toPandas()
-    salted = D.simhash_pairs(
-        docs_with_planted, max_hamming=6, blocks=12, salt=True,
-        hot_threshold=50, rows_per_task=25,
-    ).toPandas()
-    assert set(zip(plain.a, plain.b, plain.hamming)) == set(
-        zip(salted.a, salted.b, salted.hamming)
-    )
-    assert len(plain) > 0
-
-
 def test_ngram_jaccard_counts_post_stopfilter(spark):
     """na/nb must be sizes of the POST-stop-filter sets: with a boilerplate
     shingle shared by every doc removed, two docs identical except for that
@@ -285,59 +271,6 @@ def test_ngram_jaccard_counts_post_stopfilter(spark):
     pairs = D.ngram_jaccard_pairs(docs, threshold=0.9, k=5, stop_shingle_df=3).toPandas()
     got = {(r.a, r.b): r.jaccard for r in pairs.itertuples()}
     assert (1, 2) in got and abs(got[(1, 2)] - 1.0) < 1e-9
-
-
-@pytest.fixture(scope="module")
-def emb_skewed(spark):
-    """Near-duplicate-saturated corpus: 85% of candidates cluster around ONE
-    base vector (one hot LSH bucket / IVF list), the rest spread randomly.
-    The ANN skew scenario the salted join exists for (VERDICT r2 #4)."""
-    rng = np.random.default_rng(7)
-    dim = 64
-    base = rng.standard_normal(dim)
-    rows = []
-    for i in range(600):
-        if i < 510:
-            v = base + rng.standard_normal(dim) * 0.05
-        else:
-            v = rng.standard_normal(dim)
-        rows.append((i, v.astype(np.float32).tolist()))
-    cp = pd.DataFrame(rows, columns=["cand_id", "c_emb"])
-    qrows = []
-    for qi in range(40):
-        v = base + rng.standard_normal(dim) * 0.05 if qi < 30 else rng.standard_normal(dim)
-        qrows.append((qi, v.astype(np.float32).tolist()))
-    qp = pd.DataFrame(qrows, columns=["vec_id", "q_emb"])
-    c = spark.createDataFrame(cp).withColumn("c_emb", F.col("c_emb").cast("array<float>"))
-    q = spark.createDataFrame(qp).withColumn("q_emb", F.col("q_emb").cast("array<float>"))
-    return q.cache(), c.cache()
-
-
-def test_ann_lsh_salted_equals_unsalted(spark, emb_skewed):
-    q, c = emb_skewed
-    kw = dict(k=3, dim=64, n_planes=6, n_probes=2)
-    plain = SIM.lsh_ann_topk(q, c, **kw).toPandas()
-    salted = SIM.lsh_ann_topk(
-        q, c, salt=True, hot_threshold=20, rows_per_task=10, **kw
-    ).toPandas()
-    key = lambda d: sorted(map(tuple, d[["vec_id", "cand_id"]].to_numpy()))
-    assert key(plain) == key(salted)
-    # the fixture really is skewed: dominant bucket holds most candidates
-    bkt = c.withColumn(
-        "b", SIM.hyperplane_bucket_udf(64, 6, 42)(F.col("c_emb"))
-    ).groupBy("b").count().toPandas()
-    assert bkt["count"].max() >= 400
-
-
-def test_ann_ivf_salted_equals_unsalted(spark, emb_skewed):
-    q, c = emb_skewed
-    kw = dict(k=3, n_centroids=8, n_probe=2, sample=300)
-    plain = SIM.ivf_ann_topk(spark, q, c, **kw).toPandas()
-    salted = SIM.ivf_ann_topk(
-        spark, q, c, salt=True, hot_threshold=20, rows_per_task=10, **kw
-    ).toPandas()
-    key = lambda d: sorted(map(tuple, d[["vec_id", "cand_id"]].to_numpy()))
-    assert key(plain) == key(salted)
 
 
 def _uf_components(edges):
@@ -389,23 +322,6 @@ def test_lsh_semantic_pairs_exact_over_candidates(spark):
         assert cos(r.a, r.b) >= 0.95 - 1e-12  # exact verify: no false pos
     expected = {(int(v), int(v) + 10_000) for v in ep.vec_id if v % 7 == 0}
     assert expected <= set(zip(got.a, got.b))  # scaled copies never lost
-
-
-def test_lsh_semantic_pairs_salted_equals_unsalted(spark):
-    from osm_addr_tools_spark.operators.similarity import lsh_semantic_pairs
-
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(150).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    dup = e.where(F.col("vec_id") % 9 == 1).select(
-        (F.col("vec_id") + 5_000).alias("vec_id"), "embedding"
-    )
-    corpus = e.unionByName(dup)
-    plain = lsh_semantic_pairs(corpus, threshold=0.9, dim=64).toPandas()
-    salted = lsh_semantic_pairs(
-        corpus, threshold=0.9, dim=64, salt=True, hot_threshold=5, rows_per_task=10
-    ).toPandas()
-    assert set(zip(plain.a, plain.b)) == set(zip(salted.a, salted.b))
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -516,15 +432,6 @@ def test_winnow_partial_dups_stop_fp_cap(spark):
     assert len(uncapped) > 100, len(uncapped)
     assert (0, 100) in set(zip(capped.a, capped.b))
     assert len(capped) < len(uncapped) / 10, (len(capped), len(uncapped))
-
-    # salted == unsalted (r3 #8)
-    salted = D.winnow_partial_dups(
-        fp, threshold=0.5, stop_fp_df=10, salt=True,
-        hot_threshold=20, rows_per_task=10,
-    ).toPandas()
-    assert set(zip(capped.a, capped.b, capped.n_shared)) == set(
-        zip(salted.a, salted.b, salted.n_shared)
-    )
 
 
 def test_connected_components_checkpoint_resume(spark, tmp_path):

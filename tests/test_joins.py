@@ -1,5 +1,6 @@
 """Operator-level join properties (SURVEY.md §5.4): salted ≡ unsalted,
-kNN exactness vs a naive cross-join, PIP exactness vs brute force."""
+kNN exactness (salted and unsalted) vs a naive cross-join, PIP exactness
+vs brute force."""
 
 import numpy as np
 import pandas as pd
@@ -20,6 +21,22 @@ def _points(spark, n, salt_base=0, town_frac_hot=0.5):
     lon = np.where(hot, 21.0 + (S.h01(ids, 400 + salt_base) - 0.5) * 0.0004, lon)
     lat = np.where(hot, 52.2 + (S.h01(ids, 500 + salt_base) - 0.5) * 0.0003, lat)
     return pd.DataFrame({"pid": ids + salt_base * 10**6, "lon": lon, "lat": lat})
+
+
+def _knn_bruteforce(q, c, d_max, k):
+    """Sorted (pid, cid) pairs: each query's k nearest candidates within
+    ``d_max`` meters (all of them for k=None), ties broken on cid."""
+    d = G.haversine_np(
+        q.lon.to_numpy()[:, None], q.lat.to_numpy()[:, None],
+        c.c_lon.to_numpy()[None, :], c.c_lat.to_numpy()[None, :],
+    )
+    cids = c.cid.to_numpy()
+    expect = []
+    for i in range(len(q)):
+        within = np.flatnonzero(d[i] <= d_max)
+        order = np.lexsort((cids[within], d[i][within]))[:k]
+        expect += [(int(q.pid[i]), int(cids[within[j]])) for j in order]
+    return sorted(expect)
 
 
 def test_salted_join_equals_unsalted(spark):
@@ -55,19 +72,9 @@ def test_knn_join_exact_vs_bruteforce(spark):
         .select("pid", "cid", "dist_m")
         .toPandas()
     )
-    # brute force in numpy
-    d = G.haversine_np(
-        q.lon.to_numpy()[:, None], q.lat.to_numpy()[:, None],
-        c.c_lon.to_numpy()[None, :], c.c_lat.to_numpy()[None, :],
-    )
-    expect = []
-    for i in range(len(q)):
-        within = np.flatnonzero(d[i] <= d_max)
-        order = np.lexsort((c.cid.to_numpy()[within], d[i][within]))
-        for j in order[:k]:
-            expect.append((int(q.pid[i]), int(c.cid.iloc[within[j]])))
+    expect = _knn_bruteforce(q, c, d_max, k)
     got_set = sorted(map(tuple, got[["pid", "cid"]].to_numpy()))
-    assert got_set == sorted(expect)
+    assert got_set == expect
     assert len(expect) > 50  # scenario non-trivial
 
 
@@ -106,6 +113,41 @@ def test_pip_join_salted_equals_plain(spark):
     assert key(plain) == key(salted)
 
 
+@pytest.mark.parametrize("expand", ["queries", "candidates"])
+@pytest.mark.parametrize("k", [1, None], ids=["k1", "band"])
+def test_knn_join_salted_hot_cell_equals_bruteforce(spark, expand, k):
+    """The salted kNN path on a planted hot cell (half of the queries in a
+    ~30 m box): with a tiny ``hot_threshold`` the query side's hot cell is
+    salted ×S > 1, and the pairs must equal brute force and the unsalted
+    join, with the ring explode on either side, for the argmin (k=1) and
+    the distance band (k=None)."""
+    from osm_addr_tools_spark.functions import cells as C
+
+    q = _points(spark, 300)
+    c = _points(spark, 300, salt_base=1).rename(
+        columns={"pid": "cid", "lon": "c_lon", "lat": "c_lat"}
+    )
+    d_max, hot_threshold, rows_per_task = 25.0, 5, 3
+    qdf, cdf = spark.createDataFrame(q), spark.createDataFrame(c)
+    hottest = (
+        with_cell(qdf, C.level_for_max_distance(d_max))
+        .groupBy("cell").count().agg(F.max("count")).first()[0]
+    )
+    assert hottest > hot_threshold > rows_per_task, hottest  # salt factor ≥ 2
+
+    kw = dict(query_id="pid", cand_id="cid", d_max_m=d_max, k=k, expand=expand)
+    salted = knn_join(
+        qdf, cdf, salt=True, hot_threshold=hot_threshold,
+        rows_per_task=rows_per_task, **kw,
+    ).select("pid", "cid").toPandas()
+    plain = knn_join(qdf, cdf, **kw).select("pid", "cid").toPandas()
+
+    expect = _knn_bruteforce(q, c, d_max, k)
+    key = lambda df: sorted(map(tuple, df.to_numpy()))
+    assert key(salted) == expect == key(plain)
+    assert len(expect) > (50 if k == 1 else 1000), len(expect)
+
+
 def test_knn_join_ring_variants_equal_bruteforce(spark):
     """Ring generalization (VERDICT r2 #1): (2r+1)×(2r+1) at the finer
     level picked by d_max/r, with the explode on either side, must return
@@ -115,17 +157,7 @@ def test_knn_join_ring_variants_equal_bruteforce(spark):
         columns={"pid": "cid", "lon": "c_lon", "lat": "c_lat"}
     )
     d_max, k = 25.0, 2
-    d = G.haversine_np(
-        q.lon.to_numpy()[:, None], q.lat.to_numpy()[:, None],
-        c.c_lon.to_numpy()[None, :], c.c_lat.to_numpy()[None, :],
-    )
-    expect = []
-    for i in range(len(q)):
-        within = np.flatnonzero(d[i] <= d_max)
-        order = np.lexsort((c.cid.to_numpy()[within], d[i][within]))
-        for j in order[:k]:
-            expect.append((int(q.pid[i]), int(c.cid.iloc[within[j]])))
-    expect = sorted(expect)
+    expect = _knn_bruteforce(q, c, d_max, k)
     assert len(expect) > 30
     for ring_r, expand in ((2, "queries"), (3, "candidates"), (1, "candidates")):
         got = (
@@ -253,29 +285,6 @@ def test_band_join_requires_dyadic_band(spark):
     df = spark.range(3).select(F.col("id"), F.col("id").cast("double").alias("v"))
     with pytest.raises(ValueError, match="power of two"):
         band_join(df, df, "v", "v", 0.1)
-
-
-def test_band_join_salted_equals_unsalted(spark):
-    import pandas as pd
-
-    from osm_addr_tools_spark.operators.joins import band_join
-
-    # hot bucket: 300 of 400 values cluster inside one band-width
-    vals = [float(5.0 + (i % 7) * 0.001) for i in range(300)] + [
-        float(i) for i in range(100)
-    ]
-    pdf = pd.DataFrame({"id": range(len(vals)), "v": vals})
-    df = spark.createDataFrame(pdf)
-    lhs = df.select(F.col("id").alias("a"), F.col("v").alias("va"))
-    rhs = df.select(F.col("id").alias("b"), F.col("v").alias("vb"))
-    plain = {(r.a, r.b) for r in band_join(lhs, rhs, "va", "vb", 0.5).collect()}
-    salted = {
-        (r.a, r.b)
-        for r in band_join(
-            lhs, rhs, "va", "vb", 0.5, salt=True, hot_threshold=50, rows_per_task=25
-        ).collect()
-    }
-    assert plain == salted and len(plain) > 300 * 300
 
 
 def test_knn_ring_sufficiency_raises_not_asserts(monkeypatch):
